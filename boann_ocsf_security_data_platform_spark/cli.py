@@ -85,8 +85,11 @@ def cmd_convert(args) -> int:
 
 
 def cmd_ingest(args) -> int:
+    from pyspark.sql import functions as F
+
     from .plans.landing import land
     from .sources.ocsf import read_ocsf_batch
+    from .streaming.monitor import _bad_row
 
     if not args.input_file.endswith(".ocsf.json"):
         print(f"error: not an .ocsf.json file: {args.input_file}", file=sys.stderr)
@@ -94,21 +97,28 @@ def cmd_ingest(args) -> int:
     spark = _spark(args)
     df = read_ocsf_batch(spark, args.input_file).cache()
     try:
-        if df.filter(~df._parse_ok).count():
+        # one job gates the file on the monitor's bad-row rule (stricter
+        # than the reference, which inserts NULL finding_uid via .get():
+        # the dbt not_null contract is enforced at the door)
+        gate = df.agg(
+            F.sum((~F.col("_parse_ok")).cast("long")).alias("malformed"),
+            F.sum(_bad_row().cast("long")).alias("bad"),
+            F.count("raw_ocsf_json").alias("n"),
+        ).first()
+        if gate["malformed"]:
             print(f"error: malformed JSON array: {args.input_file}", file=sys.stderr)
             return 1
-        findings = df.filter(df.raw_ocsf_json.isNotNull())
-        # stricter than the reference (which inserts NULL finding_uid via
-        # .get()): enforce the dbt not_null contract at the door
-        bad = findings.filter(findings.finding_uid.isNull()).count()
-        if bad:
-            print(f"error: {bad} findings without finding_info.uid", file=sys.stderr)
+        if gate["bad"]:
+            print(
+                f"error: {gate['bad']} findings without finding_info.uid",
+                file=sys.stderr,
+            )
             return 1
-        n = findings.count()
+        findings = df.filter(df.raw_ocsf_json.isNotNull())
         land(findings.select("finding_uid", "raw_ocsf_json"), args.landing_path)
     finally:
         df.unpersist()
-    print(f"ingested {n} findings -> {args.landing_path}")
+    print(f"ingested {gate['n']} findings -> {args.landing_path}")
     return 0
 
 

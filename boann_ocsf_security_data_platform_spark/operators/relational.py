@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..storage import hadoop_fs
+
 
 def topk_per_group(
     df: DataFrame, group_cols: list[str], order_col: str, k: int, desc: bool = True
@@ -164,11 +166,8 @@ def recover_compaction(spark, path: str) -> str:
     to an intact table are stale and are cleared. Returns one of
     ``"clean" | "completed" | "rolled_back"``.
     """
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    src = P(path)
-    fs = src.getFileSystem(conf)
+    P = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs, src = hadoop_fs(spark, path)
     tmp = P(path.rstrip("/") + "__compacting")
     backup = P(path.rstrip("/") + "__pre_compact")
 
@@ -219,10 +218,7 @@ def compact_table(
 
     recover_compaction(spark, path)  # heal any interrupted prior run
 
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    src = jvm.org.apache.hadoop.fs.Path(path)
-    fs = src.getFileSystem(conf)
+    fs, src = hadoop_fs(spark, path)
     total_bytes = fs.getContentSummary(src).getLength()
     n_files = max(1, math.ceil(total_bytes / target_partition_bytes))
 
@@ -233,8 +229,9 @@ def compact_table(
         writer = writer.partitionBy(partition_col)
     writer.parquet(tmp)
 
-    backup = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__pre_compact")
-    tmp_path = jvm.org.apache.hadoop.fs.Path(tmp)
+    P = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    backup = P(path.rstrip("/") + "__pre_compact")
+    tmp_path = P(tmp)
     fs.rename(src, backup)
     fs.rename(tmp_path, src)
     fs.delete(backup, True)
@@ -854,11 +851,8 @@ def upsert_table(
     version column and resolving latest-per-key at read (the
     read-optimized vs write-optimized trade).
     """
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    src = P(path)
-    fs = src.getFileSystem(conf)
+    P = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs, src = hadoop_fs(spark, path)
     if not fs.exists(src):
         tmp = P(path.rstrip("/") + "__compacting")
         backup = P(path.rstrip("/") + "__pre_compact")

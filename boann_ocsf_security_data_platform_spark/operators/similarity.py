@@ -18,6 +18,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..storage import hadoop_fs
+
 
 def _corpus_sized(df: DataFrame, pin: bool = True) -> DataFrame:
     """Pin a corpus-scaling join input (blocked vector frames, dedup
@@ -782,10 +784,8 @@ def build_ivf_index(
     # write succeeded; a stale lists dir from a previous build can no
     # longer pair with fresh centroids behind a valid-looking marker.
     spark = corpus.sparkSession
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    marker = jvm.org.apache.hadoop.fs.Path(f"{path}/lists/_SUCCESS")
-    marker.getFileSystem(hconf).delete(marker, False)
+    fs, marker = hadoop_fs(spark, f"{path}/lists/_SUCCESS")
+    fs.delete(marker, False)
 
     train_df = corpus
     if train_sample_size is not None:
@@ -876,11 +876,8 @@ def ivf_index_is_complete(spark, path: str) -> bool:
     generation postdates the centroids next to it. Callers with a
     build-once/query-many cache (e.g. ``knn_hard_negatives``) must gate
     reuse on THIS, never on directory existence."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    cents = P(f"{path}/centroids")
-    fs = cents.getFileSystem(conf)
+    P = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs, cents = hadoop_fs(spark, f"{path}/centroids")
     return bool(
         fs.exists(cents) and fs.exists(P(f"{path}/lists/_SUCCESS"))
     )
@@ -943,9 +940,8 @@ def append_to_ivf_index(
     spark = new_vectors.sparkSession
     recover_ivf_compaction(spark, path)  # heal an interrupted compaction
     jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     lists_dir = f"{path}/lists"
-    fs = jvm.org.apache.hadoop.fs.Path(lists_dir).getFileSystem(conf)
+    fs, _ = hadoop_fs(spark, lists_dir)
     if _detect_legacy_ivf_layout(fs, jvm, lists_dir):
         raise ValueError(
             f"IVF index at {path!r} uses the legacy cent_id-only lists "
@@ -1009,7 +1005,7 @@ def compact_ivf_index(
     touched (cent_id, batch); thousands of micro-batches mean thousands of
     directories per inverted list, and file-listing cost eventually eats
     the partition-pruning advantage the layout exists for — the same
-    pressure ``streaming.prune_band_store`` and ``relational.compact_table``
+    pressure ``storage.prune_batches`` and ``relational.compact_table``
     relieve for their stores. One full read, one rewrite partitioned by
     ``cent_id``, then a two-rename directory swap.
 
@@ -1036,9 +1032,7 @@ def compact_ivf_index(
     recover_ivf_compaction(spark, path)
     lists_dir = f"{path}/lists"
     jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    lists_path = jvm.org.apache.hadoop.fs.Path(lists_dir)
-    fs = lists_path.getFileSystem(conf)
+    fs, lists_path = hadoop_fs(spark, lists_dir)
     if not fs.exists(lists_path):
         return 0
     df = spark.read.parquet(lists_dir)
@@ -1086,11 +1080,8 @@ def recover_ivf_compaction(spark, path: str) -> str:
     :func:`append_to_ivf_index`, so the first writer after a crash heals
     the index."""
     lists_dir = f"{path}/lists"
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    P = jvm.org.apache.hadoop.fs.Path
-    lists_path = P(lists_dir)
-    fs = lists_path.getFileSystem(conf)
+    P = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs, lists_path = hadoop_fs(spark, lists_dir)
     tmp = P(lists_dir + "__compacting")
     backup = P(lists_dir + "__old")
     if fs.exists(lists_path):

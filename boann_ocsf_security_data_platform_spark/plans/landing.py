@@ -21,12 +21,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import max_records_per_file
+from ..storage import write_batch
 
 
 def land(
     findings_json_df: DataFrame,
     path: str,
-    mode: str = "append",
     batch_id: int | None = None,
 ) -> None:
     """Append findings (columns ``finding_uid``, ``raw_ocsf_json`` — from
@@ -37,10 +37,12 @@ def land(
     Spark's native all-or-nothing job commit: no partial batch is visible.
 
     ``batch_id`` (the streaming micro-batch id) upgrades at-least-once to
-    effectively-once: rows are partitioned by ``_batch_id`` and written with
-    DYNAMIC partition overwrite, so a replayed micro-batch overwrites its
-    own partition instead of appending duplicates. (Caveat: a replay that
-    crosses midnight writes a new ``load_date`` sub-partition and leaves the
+    effectively-once: the rows are written with ``storage.write_batch`` —
+    a DYNAMIC partition overwrite set on the writer (the shared session's
+    conf is never touched, so concurrent writes keep their own overwrite
+    mode) — and a replayed micro-batch overwrites its own partition
+    instead of appending duplicates. (Caveat: a replay that crosses
+    midnight writes a new ``load_date`` sub-partition and leaves the
     previous day's — same at-least-once floor the reference's re-ingest
     has.)
 
@@ -51,6 +53,8 @@ def land(
     raw_ocsf_findings); mixing two partition layouts under one root makes
     the table unreadable (CONFLICTING_PARTITION_COLUMN_NAMES), so batch
     appends MUST carry the sentinel partition rather than omit the column.
+    New columns (on_schema_change='append_new_columns') become readable
+    through :func:`read_landing`'s schema merge.
     """
     # keep any extra (non-lineage) columns: on_schema_change='append_new_columns'
     extra = [
@@ -64,31 +68,17 @@ def land(
         .withColumn("loaded_at", F.current_timestamp())
         .withColumn("load_date", F.to_date(F.col("loaded_at")))
     )
-    if batch_id is None:
-        (
-            out.withColumn("_batch_id", F.lit(-1))  # sentinel: non-replayable
-            .write.mode(mode)
-            .option("mergeSchema", "true")  # on_schema_change='append_new_columns'
-            # guide §6 file sizing: split oversized write tasks; never merges
-            .option("maxRecordsPerFile", max_records_per_file())
-            .partitionBy("_batch_id", "load_date")
-            .parquet(path)
-        )
+    if batch_id is not None:
+        write_batch(out, path, batch_id, "load_date")
         return
-    spark = findings_json_df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            out.withColumn("_batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")  # dynamic: only this batch's partitions
-            .option("mergeSchema", "true")
-            .option("maxRecordsPerFile", max_records_per_file())
-            .partitionBy("_batch_id", "load_date")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        out.withColumn("_batch_id", F.lit(-1))  # sentinel: non-replayable
+        .write.mode("append")
+        # file sizing: split oversized write tasks; never merges
+        .option("maxRecordsPerFile", max_records_per_file())
+        .partitionBy("_batch_id", "load_date")
+        .parquet(path)
+    )
 
 
 def read_landing(spark: SparkSession, path: str) -> DataFrame:

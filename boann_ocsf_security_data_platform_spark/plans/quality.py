@@ -1,8 +1,8 @@
-"""Data-quality predicates — the reference's dbt tests as engine assertions.
+"""Data-quality checks — the reference's dbt tests as engine assertions.
 
-Each check returns a DataFrame of VIOLATING rows (the dbt convention: a test
-passes when its query returns zero rows). `run_quality_checks` evaluates all
-of them in one pass and `assert_quality` raises on any violation.
+Each check is a predicate that is true on a VIOLATING row (the dbt
+convention: a test passes when its query returns zero rows);
+`run_quality_checks` counts all of them in one pass.
 
 Reference tests (SURVEY.md §2.6):
 - severity domain: dbt_project/tests/generic/severity_levels.sql:1-6
@@ -14,7 +14,7 @@ Reference tests (SURVEY.md §2.6):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import VALID_SEVERITIES, VALID_STATUSES
@@ -25,39 +25,29 @@ STAGING_NOT_NULL_COLUMNS = (
     "finding_status",
     "staging_loaded_at",
 )
-LANDING_NOT_NULL_COLUMNS = ("finding_uid", "raw_ocsf_json")
 
 
-class QualityError(AssertionError):
-    """Raised when a quality check finds violating rows."""
-
-
-def severity_violations(df: DataFrame, column: str = "finding_severity") -> DataFrame:
-    return df.filter(~F.col(column).isin(*VALID_SEVERITIES) | F.col(column).isNull())
-
-
-def status_violations(df: DataFrame, column: str = "finding_status") -> DataFrame:
-    return df.filter(~F.col(column).isin(*VALID_STATUSES) | F.col(column).isNull())
-
-
-def not_null_violations(df: DataFrame, columns: tuple[str, ...]) -> DataFrame:
-    present = [c for c in columns if c in df.columns]
-    cond = None
-    for c in present:
-        clause = F.col(c).isNull()
-        cond = clause if cond is None else (cond | clause)
-    return df.filter(cond) if cond is not None else df.limit(0)
-
-
-def uid_format_violations(
-    df: DataFrame, pattern: str | None, column: str = "finding_uid"
-) -> DataFrame:
-    """Regex CHECK emulation; pattern=None disables it (the reference's
-    default — finding_uid_format_pattern var defaults to null,
+def _violations(
+    columns: list[str], uid_pattern: str | None
+) -> dict[str, Column]:
+    """Check name → violation predicate over a staging frame with
+    ``columns``. The uid regex CHECK runs only with a pattern (the
+    reference's finding_uid_format_pattern var defaults to null,
     dbt_project/dbt_project.yml:27-31)."""
-    if not pattern:
-        return df.limit(0)
-    return df.filter(~F.col(column).rlike(pattern) | F.col(column).isNull())
+    checks = {
+        "severity_domain": ~F.col("finding_severity").isin(*VALID_SEVERITIES)
+        | F.col("finding_severity").isNull(),
+        "status_domain": ~F.col("finding_status").isin(*VALID_STATUSES)
+        | F.col("finding_status").isNull(),
+    }
+    for c in STAGING_NOT_NULL_COLUMNS:
+        if c in columns:
+            checks[f"not_null_{c}"] = F.col(c).isNull()
+    if uid_pattern:
+        checks["uid_format"] = ~F.col("finding_uid").rlike(uid_pattern) | F.col(
+            "finding_uid"
+        ).isNull()
+    return checks
 
 
 def run_quality_checks(
@@ -65,34 +55,11 @@ def run_quality_checks(
 ) -> dict[str, int]:
     """Count violations per check in ONE job: a single aggregate of
     conditional sums instead of N separate scans."""
-    sev_bad = (~F.col("finding_severity").isin(*VALID_SEVERITIES)) | F.col(
-        "finding_severity"
-    ).isNull()
-    st_bad = (~F.col("finding_status").isin(*VALID_STATUSES)) | F.col(
-        "finding_status"
-    ).isNull()
-    aggs = [
-        F.sum(sev_bad.cast("long")).alias("severity_domain"),
-        F.sum(st_bad.cast("long")).alias("status_domain"),
-    ]
-    for c in STAGING_NOT_NULL_COLUMNS:
-        if c in stg_df.columns:
-            aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"not_null_{c}"))
-    if uid_pattern:
-        uid_bad = (~F.col("finding_uid").rlike(uid_pattern)) | F.col(
-            "finding_uid"
-        ).isNull()
-        aggs.append(F.sum(uid_bad.cast("long")).alias("uid_format"))
-    row = stg_df.agg(*aggs).collect()[0]
-    return {k: int(row[k] or 0) for k in row.asDict()}
-
-
-def assert_quality(stg_df: DataFrame, uid_pattern: str | None = None) -> dict[str, int]:
-    counts = run_quality_checks(stg_df, uid_pattern)
-    failing = {k: v for k, v in counts.items() if v > 0}
-    if failing:
-        raise QualityError(f"quality checks failed: {failing}")
-    return counts
+    checks = _violations(stg_df.columns, uid_pattern)
+    row = stg_df.agg(
+        *[F.sum(bad.cast("long")).alias(name) for name, bad in checks.items()]
+    ).first()
+    return {name: int(row[name] or 0) for name in checks}
 
 
 def reconciliation_violations(

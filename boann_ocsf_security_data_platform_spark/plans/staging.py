@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..schemas import OCSF_FINDING_SCHEMA
 from ..session import max_records_per_file
+from ..storage import hadoop_fs
 
 
 def _first_enrichment(enr: Column, name: str) -> Column:
@@ -47,9 +48,7 @@ def high_water_mark(spark: SparkSession, staging_path: str) -> datetime.datetime
     epoch = datetime.datetime(1970, 1, 1)
     # existence check through the Hadoop FS API (works for any URI scheme)
     # instead of a try/except read, which logs a noisy stacktrace
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(staging_path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(spark, staging_path)
     if not fs.exists(hpath):
         return epoch
     existing = spark.read.parquet(staging_path)
@@ -171,13 +170,13 @@ def stage(landing_df: DataFrame, hwm: datetime.datetime | None = None) -> DataFr
 
 
 def write_staging(stg_df: DataFrame, path: str, mode: str = "append") -> None:
-    """Incremental-append materialization with schema evolution
-    (stg:5-9: incremental_strategy='append',
-    on_schema_change='append_new_columns')."""
+    """Incremental-append materialization (stg:5-9:
+    incremental_strategy='append'). New columns
+    (on_schema_change='append_new_columns') are written as they come; a
+    reader sees them through Parquet's read-side ``mergeSchema`` option."""
     (
         stg_df.withColumn("load_date", F.to_date(F.col("staging_loaded_at")))
         .write.mode(mode)
-        .option("mergeSchema", "true")
         # guide §6 file sizing: split oversized write tasks; never merges
         .option("maxRecordsPerFile", max_records_per_file())
         .partitionBy("load_date")

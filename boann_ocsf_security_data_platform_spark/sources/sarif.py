@@ -4,8 +4,8 @@ scripts/converters/sarif_to_ocsf.py:84-105 json.load per file).
 Spark re-conception: one distributed multiLine-JSON read over any number of
 files/globs; the fixed `SARIF_SCHEMA` keeps the scan schema-stable (no
 sampling pass) and `_source_file` carries lineage for disposition and
-debugging. Malformed JSON surfaces in `_corrupt_record` instead of failing
-the job (PERMISSIVE), matching the reference monitor's isolate-the-bad-file
+debugging. Malformed JSON yields an all-NULL row instead of failing the job
+(PERMISSIVE), matching the reference monitor's isolate-the-bad-file
 behavior.
 """
 
@@ -13,30 +13,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 from ..schemas import SARIF_SCHEMA
 
 
-def read_sarif(
-    spark: SparkSession, path: str | list[str], keep_corrupt: bool = False
-) -> DataFrame:
-    """Note: Spark disallows queries that reference ONLY the corrupt-record
-    column of a raw JSON scan — ``collect()`` full rows or ``cache()`` the
-    DataFrame before filtering on ``_corrupt_record`` alone."""
-    schema = SARIF_SCHEMA
-    if keep_corrupt:
-        # copy-extend: StructType.add mutates the receiver in place
-        from pyspark.sql.types import StructField, StructType
-
-        schema = StructType(
-            list(SARIF_SCHEMA.fields) + [StructField("_corrupt_record", StringType())]
-        )
+def read_sarif(spark: SparkSession, path: str | list[str]) -> DataFrame:
     reader = (
-        spark.read.schema(schema)
+        spark.read.schema(SARIF_SCHEMA)
         .option("multiLine", True)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
     )
-    df = reader.json(path)
-    return df.withColumn("_source_file", F.input_file_name())
+    return reader.json(path).withColumn("_source_file", F.input_file_name())

@@ -9,16 +9,8 @@ from .decontam import (  # noqa: F401
     read_clean_docs,
     start_decontamination_stream,
 )
-from .exactdedup import (  # noqa: F401
-    prune_hash_store,
-    read_kept_docs,
-    start_exact_dedup_stream,
-)
-from .neardup import (  # noqa: F401
-    prune_band_store,
-    read_near_dup_pairs,
-    start_near_dup_stream,
-)
+from .exactdedup import read_kept_docs, start_exact_dedup_stream  # noqa: F401
+from .neardup import read_near_dup_pairs, start_near_dup_stream  # noqa: F401
 from .funnel import (  # noqa: F401
     compact_funnel_index,
     last_committed_batch,

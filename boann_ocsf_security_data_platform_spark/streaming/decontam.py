@@ -23,7 +23,8 @@ the stream's history is kept (contamination is memoryless, unlike
 near-dup), so there is no state store to bound. Exactly-once: the clean
 sink is a batch_id-keyed dynamic partition overwrite, so a replayed
 micro-batch overwrites its own partition instead of duplicating documents
-(same recipe as streaming/neardup.py and the landing sink)."""
+(the storage.py layout shared with streaming/neardup.py and the landing
+sink)."""
 
 from __future__ import annotations
 
@@ -31,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import with_hashed_shingles
+from ..storage import start_batches, write_batch
 
 
 def benchmark_shingles(
@@ -77,22 +79,12 @@ def start_decontamination_stream(
             .distinct()
         )
         clean = batch_df.join(contaminated, id_col, "left_anti")
-        (
-            clean.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(clean_dir)
-        )
+        write_batch(clean, clean_dir, batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(_probe).option(
-        "checkpointLocation", checkpoint_dir
+    query = start_batches(
+        stream_df, _probe, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start(), b_sh.unpersist
+    return query, b_sh.unpersist
 
 
 def read_clean_docs(spark: SparkSession, clean_dir: str) -> DataFrame:

@@ -11,7 +11,7 @@ streaming/neardup.py and the landing sink.
 
 At 100 TB the per-batch cost is one hash aggregate over the batch plus
 one equi-join against a two-narrow-column store; the store is bounded
-by distinct content hashes and retired with :func:`prune_hash_store`
+by distinct content hashes and retired with ``storage.prune_batches``
 (the dedup-within-horizon trade, same semantics as Spark's
 ``dropDuplicatesWithinWatermark``).
 
@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from boann_ocsf_security_data_platform_spark.operators.dedup import normalize_text
+from ..operators.dedup import normalize_text
+from ..storage import read_batches, start_batches, write_batch
 
 
 def _store_schema(id_col: str, id_type) -> StructType:
@@ -44,21 +45,6 @@ def _store_schema(id_col: str, id_type) -> StructType:
             StructField("_batch_id", LongType()),
         ]
     )
-
-
-def _read_store(
-    spark: SparkSession, store_dir: str, id_col: str, id_type
-) -> DataFrame:
-    try:
-        return spark.read.schema(_store_schema(id_col, id_type)).parquet(
-            store_dir
-        )
-    except Exception as e:  # noqa: BLE001 - first batch: no store yet
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame(
-                [], _store_schema(id_col, id_type)
-            )
-        raise
 
 
 def start_exact_dedup_stream(
@@ -93,9 +79,9 @@ def start_exact_dedup_stream(
             .agg(F.min(id_col).alias(id_col))
         ).persist()
         try:
-            prev = _read_store(spark, store_dir, id_col, id_type).select(
-                "content_hash"
-            )
+            prev = read_batches(
+                spark, store_dir, _store_schema(id_col, id_type)
+            ).select("content_hash")
             # materialize the anti-join BEFORE any write: the second write
             # below overwrites store_dir, and a lazy `kept` plan would
             # re-scan store_dir (via `prev`) while it is being overwritten
@@ -104,31 +90,14 @@ def start_exact_dedup_stream(
             kept = winners.join(
                 prev, "content_hash", "left_anti"
             ).localCheckpoint()
-            (
-                kept.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(kept_dir)
-            )
-            (
-                kept.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(store_dir)
-            )
+            write_batch(kept, kept_dir, batch_id)
+            write_batch(kept, store_dir, batch_id)
         finally:
             winners.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(_dedup).option(
-        "checkpointLocation", checkpoint_dir
+    return start_batches(
+        stream_df, _dedup, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def read_kept_docs(spark: SparkSession, kept_dir: str) -> DataFrame:
@@ -137,33 +106,3 @@ def read_kept_docs(spark: SparkSession, kept_dir: str) -> DataFrame:
     most one batch partition because later batches anti-join the
     store)."""
     return spark.read.parquet(kept_dir).drop("_batch_id")
-
-
-def prune_hash_store(
-    spark: SparkSession, store_dir: str, keep_from_batch_id: int
-) -> None:
-    """Bounded-state valve: drop store partitions older than
-    ``keep_from_batch_id``. After pruning, re-sent copies of documents
-    seen only in retired batches are kept again — the documented
-    dedup-within-horizon trade.
-
-    Pruning goes through the Hadoop FileSystem API (r7 ADVICE #2), so it
-    honors the SAME path contract as the Spark writers that build the
-    store: any URI Spark can write (local, HDFS, object stores with the
-    right connector jars) can be pruned — no silent no-op on non-local
-    filesystems."""
-    jvm = spark._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(store_dir)
-    fs = root.getFileSystem(hconf)
-    if not fs.exists(root):
-        return
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if name.startswith("_batch_id="):
-            try:
-                bid = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if bid < keep_from_batch_id:
-                fs.delete(status.getPath(), True)

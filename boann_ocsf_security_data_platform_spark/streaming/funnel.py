@@ -40,8 +40,8 @@ Scale posture (100 TB): per batch, exact dedup is one hash-aggregate +
 one anti-join against a two-column store; near-dup is row-local
 shingle/sign/band work + one equi-join against a three-column band store;
 quality is a projection; decontamination is one broadcast semi-join.
-State = the two stores, both pruned by the existing
-``prune_hash_store`` / ``prune_band_store`` valves (dedup-within-horizon).
+State = the two stores, both pruned by the ``storage.prune_batches`` valve
+(dedup-within-horizon).
 """
 
 from __future__ import annotations
@@ -51,14 +51,11 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import normalize_text
 from ..operators.text import text_quality
+from ..storage import hadoop_fs, read_batches, start_batches, write_batch
 from .decontam import benchmark_shingles
-from .exactdedup import _read_store as _read_hash_store
+from .exactdedup import _store_schema as _hash_store_schema
 from .neardup import _band_keys_for_batch
-from .neardup import _read_store as _read_band_store
-
-# re-exported so funnel users find the state valves next to the stream
-from .exactdedup import prune_hash_store  # noqa: F401
-from .neardup import prune_band_store  # noqa: F401
+from .neardup import _store_schema as _band_store_schema
 
 _COUNT_STAGES = (
     "s0_raw",
@@ -133,7 +130,9 @@ def start_curation_funnel_stream(
         # idempotency from empty-dynamic-overwrite being a no-op, but the
         # counts sink below is never empty, so the funnel needs the guard)
         prev_hashes = (
-            _read_hash_store(spark, hash_store_dir, id_col, id_type)
+            read_batches(
+                spark, hash_store_dir, _hash_store_schema(id_col, id_type)
+            )
             .filter(F.col("_batch_id") < F.lit(batch_id))
             .select("content_hash")
         )
@@ -148,7 +147,9 @@ def start_curation_funnel_stream(
             s1, text_col, id_col, k, n_hashes, n_bands
         ).localCheckpoint()  # pinned BEFORE the band-store overwrite
         prev_bands = (
-            _read_band_store(spark, band_store_dir, id_col, id_type)
+            read_batches(
+                spark, band_store_dir, _band_store_schema(id_col, id_type)
+            )
             .filter(F.col("_batch_id") < F.lit(batch_id))  # replay guard
             .select(F.col(id_col).alias("_prev_id"), "band_idx", "band_hash")
         )
@@ -215,13 +216,7 @@ def start_curation_funnel_stream(
 
         # -- sinks (batch-id dynamic overwrite; stores written LAST, after
         # every reader of the previous store generation has been pinned) -
-        (
-            s4.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(survivors_dir)
-        )
+        write_batch(s4, survivors_dir, batch_id)
         count_rows = [
             ("s0_raw", batch_df.count()),
             ("s1_exact_dedup", s1_ids.count()),
@@ -235,36 +230,14 @@ def start_curation_funnel_stream(
             count_rows,
             "stage string, n_docs long",
         )
-        (
-            counts.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(counts_dir)
-        )
-        (
-            s1_ids.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(hash_store_dir)
-        )
-        (
-            bands.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(band_store_dir)
-        )
+        write_batch(counts, counts_dir, batch_id)
+        write_batch(s1_ids, hash_store_dir, batch_id)
+        write_batch(bands, band_store_dir, batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(_funnel).option(
-        "checkpointLocation", checkpoint_dir
+    query = start_batches(
+        stream_df, _funnel, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start(), b_sh.unpersist
+    return query, b_sh.unpersist
 
 
 def last_committed_batch(spark: SparkSession, checkpoint_dir: str):
@@ -275,12 +248,7 @@ def last_committed_batch(spark: SparkSession, checkpoint_dir: str):
     FS API, so any checkpoint scheme works. A committed batch is the one
     kind of batch ``foreachBatch`` never replays — which makes this the
     safe fold bound for :func:`compact_funnel_index`."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    commits = jvm.org.apache.hadoop.fs.Path(
-        checkpoint_dir.rstrip("/") + "/commits"
-    )
-    fs = commits.getFileSystem(conf)
+    fs, commits = hadoop_fs(spark, checkpoint_dir.rstrip("/") + "/commits")
     if not fs.exists(commits):
         return None
     best = None

@@ -29,31 +29,26 @@ import logging
 import signal
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.ocsf import read_ocsf_batch
+from ..plans.landing import land
+from ..sources.ocsf import read_ocsf_batch, split_findings, split_findings_rows
+from ..storage import hadoop_fs, start_batches
 
 logger = logging.getLogger(__name__)
 
 
 # ---------------------------------------------------------------------------
-# Hadoop FS helpers (URI-scheme agnostic: file://, gs://, s3a://, hdfs://)
+# File disposition (Hadoop FS: file://, gs://, s3a://, hdfs://)
 # ---------------------------------------------------------------------------
-
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
-
 
 def list_source_files(
     spark: SparkSession, source_dir: str, suffix: str = ".ocsf.json"
 ) -> list[str]:
     """Sorted (lexicographic) listing — the reference's deterministic
     processing order (ocsf_monitor.py:153-159, gcs_utils.py:76-87)."""
-    fs, hpath, _ = _fs_for(spark, source_dir)
+    fs, hpath = hadoop_fs(spark, source_dir)
     if not fs.exists(hpath):
         return []
     out = []
@@ -66,11 +61,12 @@ def list_source_files(
 
 def move_file(spark: SparkSession, src: str, dst_dir: str) -> None:
     """Move preserving the file name (reference K3/K4 disposition)."""
-    fs, src_path, jvm = _fs_for(spark, src)
-    dst_dir_path = jvm.org.apache.hadoop.fs.Path(dst_dir)
+    fs, src_path = hadoop_fs(spark, src)
+    P = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    dst_dir_path = P(dst_dir)
     if not fs.exists(dst_dir_path):
         fs.mkdirs(dst_dir_path)
-    dst = jvm.org.apache.hadoop.fs.Path(dst_dir, src_path.getName())
+    dst = P(dst_dir, src_path.getName())
     if fs.exists(dst):
         fs.delete(dst, False)
     fs.rename(src_path, dst)
@@ -113,30 +109,10 @@ def process_directory(
     candidates = [f for f in files if f not in failed]
     if candidates:
         # one distributed whole-text read of every remaining file; per-file
-        # parse health decided from the data itself. raw_ocsf_json is the
-        # VERBATIM array element (sources.ocsf.split_findings) — no schema
-        # round-trip, so unknown/extra fields survive into landing exactly
-        # like the reference's raw JSONB insert.
-        raw = read_ocsf_batch(spark, candidates).cache()
-        # a file fails if it is unparseable (non-JSON / non-array root) OR
-        # any finding lacks finding_info.uid. The uid gate is stricter than
-        # the reference (which .get()s and inserts NULL finding_uid,
-        # ingest_raw_ocsf_findings.py:115-123): quarantining the file here
-        # keeps the dbt not_null contract on finding_uid
-        # (dbt_project/models/.../schema.yml) enforceable downstream instead
-        # of landing rows that are guaranteed to fail quality checks.
-        bad = _bad_file_frame(raw)
-        # exclusion of bad files from landing is a distributed anti-join —
-        # NEVER keyed off the (capped) driver-side list, so correctness is
-        # independent of how many files failed
-        good = raw.join(bad, "_source_file", "left_anti").filter(
-            F.col("raw_ocsf_json").isNotNull()
+        # parse health decided from the data itself
+        bad_files, overflowed = _ingest(
+            read_ocsf_batch(spark, candidates), landing_path
         )
-        from ..plans.landing import land
-
-        land(good.select("finding_uid", "raw_ocsf_json"), landing_path)
-        bad_files, overflowed = _collect_bad_files(bad)
-        raw.unpersist()
         failed.update(_norm_matches(bad_files, candidates))
         if overflowed:
             # beyond the cap we cannot tell good files from bad driver-side,
@@ -197,17 +173,53 @@ def make_subprocess_validator(
 MAX_BAD_FILES_PER_SWEEP = 10_000
 
 
-def _bad_file_frame(rows: DataFrame) -> DataFrame:
-    """Distinct source files with any unparseable or uid-less finding —
-    stays distributed; join against it to exclude from landing."""
-    return (
-        rows.filter(
-            ~F.col("_parse_ok")
-            | (F.col("raw_ocsf_json").isNotNull() & F.col("finding_uid").isNull())
-        )
-        .select("_source_file")
-        .distinct()
+def _bad_row() -> Column:
+    """A finding row that rejects its whole file: the file is unparseable
+    (non-JSON / non-array root) OR the finding lacks finding_info.uid. The
+    uid gate is stricter than the reference (which .get()s and inserts
+    NULL finding_uid, ingest_raw_ocsf_findings.py:115-123): quarantining
+    the file keeps the dbt not_null contract on finding_uid
+    (dbt_project/models/.../schema.yml) enforceable downstream instead of
+    landing rows that are guaranteed to fail quality checks."""
+    return ~F.col("_parse_ok") | (
+        F.col("raw_ocsf_json").isNotNull() & F.col("finding_uid").isNull()
     )
+
+
+def _bad_file_frame(rows: DataFrame) -> DataFrame:
+    """Distinct source files with any bad row — stays distributed; join
+    against it to exclude from landing."""
+    return rows.filter(_bad_row()).select("_source_file").distinct()
+
+
+def _ingest(
+    rows: DataFrame, landing_path: str, batch_id: int | None = None
+) -> tuple[set[str], bool]:
+    """The ingest core shared by the batch sweep and the stream: land the
+    findings of every file without a bad row, then return the capped
+    driver-side bad-file set as ``(bad_files, overflowed)``.
+
+    ``rows`` is the per-finding frame of ``sources.ocsf``; its
+    ``raw_ocsf_json`` is the VERBATIM array element, so unknown/extra
+    fields survive into landing exactly like the reference's raw JSONB
+    insert. Exclusion of bad files is a distributed anti-join — NEVER
+    keyed off the capped driver-side list, so correctness is independent
+    of how many files failed. ``batch_id`` is passed through to ``land``.
+    """
+    rows = rows.cache()
+    try:
+        bad = _bad_file_frame(rows)
+        good = rows.join(bad, "_source_file", "left_anti").filter(
+            F.col("raw_ocsf_json").isNotNull()
+        )
+        land(
+            good.select("finding_uid", "raw_ocsf_json"),
+            landing_path,
+            batch_id=batch_id,
+        )
+        return _collect_bad_files(bad)
+    finally:
+        rows.unpersist()
 
 
 def _collect_bad_files(bad: DataFrame) -> tuple[set[str], bool]:
@@ -288,44 +300,26 @@ def start_monitor_stream(
     )
 
     def _land_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..sources.ocsf import split_findings, split_findings_rows
-
-        rows = split_findings_rows(
-            batch_df.withColumn("_findings", split_findings(F.col("value")))
-        ).cache()
-        try:
-            bad = _bad_file_frame(rows)
-            good = rows.join(bad, "_source_file", "left_anti").filter(
-                F.col("raw_ocsf_json").isNotNull()
+        # batch_id-keyed dynamic overwrite: micro-batch replays after a
+        # crash overwrite their own partition instead of duplicating
+        bad_files, _ = _ingest(
+            split_findings_rows(
+                batch_df.withColumn("_findings", split_findings(F.col("value")))
+            ),
+            landing_path,
+            batch_id,
+        )
+        if bad_files:
+            logger.warning(
+                "batch %d: %d file(s) rejected", batch_id, len(bad_files)
             )
-            from ..plans.landing import land
+            if failed_dir is not None:
+                for f in sorted(bad_files):
+                    move_file(spark, f, failed_dir)
 
-            # batch_id-keyed dynamic overwrite: micro-batch replays after a
-            # crash overwrite their own partition instead of duplicating
-            land(
-                good.select("finding_uid", "raw_ocsf_json"),
-                landing_path,
-                batch_id=batch_id,
-            )
-            bad_files, _ = _collect_bad_files(bad)
-            if bad_files:
-                logger.warning(
-                    "batch %d: %d file(s) rejected", batch_id, len(bad_files)
-                )
-                if failed_dir is not None:
-                    for f in sorted(bad_files):
-                        move_file(spark, f, failed_dir)
-        finally:
-            rows.unpersist()
-
-    writer = stream.writeStream.foreachBatch(_land_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_batches(
+        stream, _land_batch, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def stop_on_signal(query) -> None:

@@ -23,12 +23,12 @@ compute plus one equi-join against the store, which Parquet-prunes on
 band_idx and carries only (id, band_idx, band_hash) — 3 narrow columns, not
 documents. The store grows with corpus size exactly like the batch
 operator's exploded band table (n_bands rows/doc); for bounded state,
-retire old band keys by time (`prune_band_store`) — the streaming analog of
+retire old band keys by time (`storage.prune_batches`) — the streaming analog of
 dedup-within-horizon (dropDuplicatesWithinWatermark keeps the same bound
 for exact dedup). Exactly-once: both sinks are batch_id-keyed dynamic
 partition overwrites, so a replayed micro-batch overwrites its own
-partition instead of duplicating pairs (same recipe as the landing sink,
-streaming/monitor.py)."""
+partition instead of duplicating pairs (the storage.py layout shared with
+the landing sink)."""
 
 from __future__ import annotations
 
@@ -40,6 +40,7 @@ from ..operators.dedup import (
     minhash_signature,
     with_hashed_shingles,
 )
+from ..storage import read_batches, start_batches, write_batch
 
 PAIRS_SCHEMA = "id_a long, id_b long"
 
@@ -86,21 +87,6 @@ def _band_keys_for_batch(
     )
 
 
-def _read_store(
-    spark: SparkSession, store_dir: str, id_col: str, id_type
-) -> DataFrame:
-    # existence-checked, not exception-swallowed: a CORRUPT store must
-    # fail the batch loudly (silently treating it as empty would drop
-    # every cross-batch duplicate pair), only a genuinely absent store
-    # (first batch) reads as empty
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(store_dir)
-    if not path.getFileSystem(conf).exists(path):
-        return spark.createDataFrame([], _store_schema(id_col, id_type))
-    return spark.read.schema(_store_schema(id_col, id_type)).parquet(store_dir)
-
-
 def start_near_dup_stream(
     stream_df: DataFrame,
     store_dir: str,
@@ -128,9 +114,9 @@ def start_near_dup_stream(
             batch_df, text_col, id_col, k, n_hashes, n_bands
         ).persist()
         try:
-            prev = _read_store(spark, store_dir, id_col, id_type).select(
-                F.col(id_col).alias("_prev_id"), "band_idx", "band_hash"
-            )
+            prev = read_batches(
+                spark, store_dir, _store_schema(id_col, id_type)
+            ).select(F.col(id_col).alias("_prev_id"), "band_idx", "band_hash")
             vs_store = bands.join(prev, ["band_idx", "band_hash"]).select(
                 F.least(F.col(id_col), F.col("_prev_id")).alias("id_a"),
                 F.greatest(F.col(id_col), F.col("_prev_id")).alias("id_b"),
@@ -149,32 +135,15 @@ def start_near_dup_stream(
                 vs_store.unionByName(within)
                 .filter(F.col("id_a") != F.col("id_b"))
                 .distinct()
-                .withColumn("_batch_id", F.lit(batch_id))
             )
-            (
-                pairs.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(pairs_dir)
-            )
-            (
-                bands.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(store_dir)
-            )
+            write_batch(pairs, pairs_dir, batch_id)
+            write_batch(bands, store_dir, batch_id)
         finally:
             bands.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(_detect).option(
-        "checkpointLocation", checkpoint_dir
+    return start_batches(
+        stream_df, _detect, checkpoint_dir, trigger_seconds, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def read_near_dup_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
@@ -187,29 +156,3 @@ def read_near_dup_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
         .select("id_a", "id_b")
         .distinct()
     )
-
-
-def prune_band_store(
-    spark: SparkSession, store_dir: str, keep_from_batch_id: int
-) -> None:
-    """Bounded-state valve: drop store partitions older than
-    ``keep_from_batch_id`` (partition-pruned delete — directory removal,
-    no data rewrite). After pruning, duplicates of documents seen only in
-    retired batches are no longer detected — the documented
-    dedup-within-horizon trade, same semantics as
-    dropDuplicatesWithinWatermark for exact streaming dedup."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(store_dir)
-    fs = path.getFileSystem(conf)
-    if not fs.exists(path):
-        return
-    for status in fs.listStatus(path):
-        name = status.getPath().getName()
-        if name.startswith("_batch_id="):
-            try:
-                bid = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if bid < keep_from_batch_id:
-                fs.delete(status.getPath(), True)

@@ -697,11 +697,11 @@ def test_streaming_near_dup_matches_batch(spark, tmp_path):
 def test_streaming_near_dup_replay_and_prune(spark, tmp_path):
     """Batch-id-keyed dynamic overwrite makes pair emission idempotent
     (restarting the stream over the same files duplicates nothing) and
-    prune_band_store retires old partitions without touching new ones."""
+    prune_batches retires old partitions without touching new ones."""
     import os
 
+    from boann_ocsf_security_data_platform_spark.storage import prune_batches
     from boann_ocsf_security_data_platform_spark.streaming import (
-        prune_band_store,
         read_near_dup_pairs,
         start_near_dup_stream,
     )
@@ -738,7 +738,7 @@ def test_streaming_near_dup_replay_and_prune(spark, tmp_path):
     assert {(r.id_a, r.id_b) for r in again} == {(1, 2)}
     parts = [p for p in os.listdir(dirs["store"]) if p.startswith("_batch_id=")]
     assert parts
-    prune_band_store(spark, dirs["store"], keep_from_batch_id=10**9)
+    prune_batches(spark, dirs["store"], keep_from_batch_id=10**9)
     left = [p for p in os.listdir(dirs["store"]) if p.startswith("_batch_id=")]
     assert left == []
 
@@ -1229,10 +1229,10 @@ def test_streaming_exact_dedup_matches_batch(spark, tmp_path):
 
 def test_streaming_exact_dedup_replay_and_prune(spark, tmp_path):
     """Replaying the same files duplicates nothing (batch-id dynamic
-    overwrite) and prune_hash_store retires old partitions so re-sent
+    overwrite) and prune_batches retires old partitions so re-sent
     old content is kept again — the dedup-within-horizon trade."""
+    from boann_ocsf_security_data_platform_spark.storage import prune_batches
     from boann_ocsf_security_data_platform_spark.streaming import (
-        prune_hash_store,
         read_kept_docs,
         start_exact_dedup_stream,
     )
@@ -1273,7 +1273,7 @@ def test_streaming_exact_dedup_replay_and_prune(spark, tmp_path):
     )
     assert again == [1]
     # prune everything: re-sent old content is now kept again
-    prune_hash_store(spark, dirs["store"], keep_from_batch_id=99)
+    prune_batches(spark, dirs["store"], keep_from_batch_id=99)
     import glob
 
     assert not glob.glob(f"{dirs['store']}/_batch_id=*")
@@ -1447,15 +1447,12 @@ def test_streaming_curation_funnel_replay_idempotent(spark, tmp_path):
 
 
 def test_streaming_curation_funnel_prune_horizon(spark, tmp_path):
-    """The funnel's state valves are the standalone prune functions
-    (re-exported from streaming.funnel): after pruning BOTH stores, a
+    """The funnel's state valve is storage.prune_batches, the one prune
+    function of every batch-keyed store: after pruning BOTH stores, a
     re-sent copy of an old document is no longer recognized as a
     duplicate — the documented dedup-within-horizon trade, now holding
     for the composed pipeline too."""
-    from boann_ocsf_security_data_platform_spark.streaming.funnel import (
-        prune_band_store,
-        prune_hash_store,
-    )
+    from boann_ocsf_security_data_platform_spark.storage import prune_batches
     from boann_ocsf_security_data_platform_spark.streaming import (
         read_funnel_survivors,
         start_curation_funnel_stream,
@@ -1495,8 +1492,8 @@ def test_streaming_curation_funnel_prune_horizon(spark, tmp_path):
     } == {1}
     # ...but after the horizon retires all stored state, a third copy
     # sails through (stores empty => nothing to collide with)
-    prune_hash_store(spark, d["hash"], keep_from_batch_id=99)
-    prune_band_store(spark, d["band"], keep_from_batch_id=99)
+    prune_batches(spark, d["hash"], keep_from_batch_id=99)
+    prune_batches(spark, d["band"], keep_from_batch_id=99)
     (src / "b2.json").write_text(json.dumps({"doc_id": 3, "text": good}))
     run("funp_ckpt_a")
     assert {
